@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_playground_spark.registry import register
+from parquet_playground_spark.registry import register, track_confs
 from parquet_playground_spark.tables import load_table
 
 
@@ -408,40 +408,34 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe rows at the scan instead of shuffling them. Results are
     identical to the plain join (the filter is conservative), which is
     exactly what the oracle checks; tests pin might_contain in the
-    plan. Conf is scoped: the probe-side size threshold defaults to
-    10GB, sized here to the test data."""
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        li = load_table(spark, sf_dir, "lineitem")
-        o = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_totalprice") > 55000
-        )
-        joined = li.join(o, li.l_orderkey == o.o_orderkey)
-        # exact cents (q1/q19 pattern — drifted at sf1's ~2.8e11)
-        return joined.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            (
-                F.sum(
-                    F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
-                / 100.0
-            ).alias("sum_price"),
-        )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    plan. The confs hold until the next registered query starts
+    (registry.track_confs): the optimizer injects the filter when the
+    caller plans the returned frame. The probe-side size threshold
+    defaults to 10GB, sized here to the test data."""
+    track_confs(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+            "spark.sql.optimizer.runtime.bloomFilter."
+            "applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    )
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 55000)
+    joined = li.join(o, li.l_orderkey == o.o_orderkey)
+    # exact cents (q1/q19 pattern — drifted at sf1's ~2.8e11)
+    return joined.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        (
+            F.sum(
+                F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast(
+                    "decimal(38,0)"
+                )
+            ).cast("double")
+            / 100.0
+        ).alias("sum_price"),
+    )
 
 
 @register(

@@ -18,14 +18,17 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_playground_spark.session import set_confs
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 # Resources acquired while building the CURRENT query's plan —
-# persisted DataFrames (track_persist) and streaming memory-sink temp
-# views (track_temp_view). A query function can't release its own:
+# persisted DataFrames (track_persist), streaming memory-sink temp
+# views (track_temp_view) and conf overrides the returned frame runs
+# under (track_confs). A query function can't release its own:
 # the caller materializes the returned DataFrame only after the
 # function exits. So every registered query releases the PREVIOUS
 # query's tracked resources on entry, and a sequential sweep (the
@@ -61,6 +64,14 @@ def track_temp_view(spark: SparkSession, name: str) -> None:
     _TRACKED_CLEANUPS.append(
         lambda: spark.catalog.dropTempView(name)
     )
+
+
+def track_confs(spark: SparkSession, confs: dict[str, str]) -> None:
+    """Set confs the returned frame must still see when the caller
+    executes it (optimizer rules, AQE replanning), and restore them at
+    the next registered query's entry. Eager work scopes its confs
+    with session.conf_scope instead."""
+    _TRACKED_CLEANUPS.append(set_confs(spark, confs))
 
 
 def release_tracked_caches() -> None:

@@ -133,7 +133,7 @@ def encrypted_corpus_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     check: garbage decryption could not produce the arithmetic series
     the files contain, so a wrong key/AAD shows up as an error row, not
     a silent pass."""
-    from parquet_playground_spark.tables import ensure_session_defaults
+    from parquet_playground_spark.session import ensure_session_defaults
 
     ensure_session_defaults(spark)
     install_crypto_classloader(spark)
@@ -205,9 +205,8 @@ def write_encrypted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
-    from parquet_playground_spark.tables import ensure_session_defaults, load_table
+    from parquet_playground_spark.tables import load_table
 
-    ensure_session_defaults(spark)
     install_crypto_classloader(spark)
     src = (
         load_table(spark, sf_dir, "lineitem")

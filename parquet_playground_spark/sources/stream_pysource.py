@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import ensure_session_defaults
+from parquet_playground_spark.session import ensure_session_defaults
 
 ROWS_PER_PARTITION = 2000
 # cap on partitions per micro-batch: availableNow replays the whole
@@ -174,6 +174,12 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import uuid
 
+    # imported here: at module level it would register the streaming
+    # queries ahead of sources/writes.py and change the check order
+    from parquet_playground_spark.streaming.stream_queries import (
+        stream_conf_scope,
+    )
+
     ensure_session_defaults(spark)
     ensure_registered(spark)
     path = os.path.join(sf_dir, "events.parquet")
@@ -184,13 +190,8 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").alias("min_id"),
         F.max("event_id").alias("max_id"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8"),
-    )
-    try:
-        sink = f"pp_pysrc_{uuid.uuid4().hex[:12]}"
+    sink = f"pp_pysrc_{uuid.uuid4().hex[:12]}"
+    with stream_conf_scope(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(sink)
@@ -199,8 +200,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)
 
 

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register, track_temp_view
-from parquet_playground_spark.tables import ensure_session_defaults, load_table
+from parquet_playground_spark.session import conf_scope, ensure_session_defaults
+from parquet_playground_spark.tables import load_table
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -146,47 +147,12 @@ def _stream_shuffle_partitions(
     return str(max(int(dp), 8))
 
 
-def _maybe_report_state_metrics(q) -> None:
-    """Opt-in (SPARK_GRAFT_STREAM_METRICS=1): print the last
-    state-bearing micro-batch's state-store metrics to stderr — rows
-    held, on-heap/native memory used, and the RocksDB custom metrics
-    (SST file bytes = what spills to local disk). This is how the
-    cross-scale streaming screens record that state stays bounded as
-    events grow (r6 VERDICT item 3); off by default so the driver's
-    stdout JSON contract is untouched."""
-    if os.environ.get("SPARK_GRAFT_STREAM_METRICS") != "1":
-        return
-    import sys as _sys
-
-    for p in reversed(q.recentProgress):
-        ops = p.stateOperators or []
-        if not ops:
-            continue
-        for op in ops:
-            custom = op.customMetrics or {}
-            # Disk spill = SST-file byte counters ONLY. RocksDB also
-            # exposes memory-side byte counters (memtable, block
-            # cache, pinned blocks); labeling any *bytes* metric as
-            # disk would over-claim what spilled (r7 ADVICE #3).
-            disk = {
-                k: v
-                for k, v in sorted(custom.items())
-                if "sst" in k.lower()
-            }
-            mem_bytes = {
-                k: v
-                for k, v in sorted(custom.items())
-                if "sst" not in k.lower() and "bytes" in k.lower()
-            }
-            print(
-                f"[stream-state] {op.operatorName}: "
-                f"rowsTotal={op.numRowsTotal} "
-                f"memUsedBytes={op.memoryUsedBytes} "
-                f"rocksdbSstDisk={disk} "
-                f"rocksdbMemBytes={mem_bytes}",
-                file=_sys.stderr,
-            )
-        break
+def stream_conf_scope(spark: SparkSession):
+    """conf_scope for one stream run: the state-store partition count
+    from _stream_shuffle_partitions."""
+    return conf_scope(
+        spark, {"spark.sql.shuffle.partitions": _stream_shuffle_partitions(spark)}
+    )
 
 
 def _run_to_table(
@@ -219,24 +185,7 @@ def _run_to_table(
     on a real cluster so a forgotten env var can never serialize state
     ops on a 1000-executor job (VERDICT r4 watch item)."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _stream_shuffle_partitions(spark),
-    )
-    # RocksDB state store: streaming state lives in native memory /
-    # local disk, not the JVM heap. The default HDFSBackedStateStore
-    # keeps every partition's state map on-heap — measured OOM at the
-    # sf1 screen (6M events, session windows, 1g vanilla heap), and
-    # the same failure shape a 100 TB stateful job hits whenever state
-    # outgrows executor heap. Read at query start, so a per-run conf
-    # is sufficient; rocksdbjni ships with Spark 4.
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with stream_conf_scope(spark):
         if sink == "files":
             out_dir = os.path.join(
                 tempfile.gettempdir(),
@@ -254,7 +203,6 @@ def _run_to_table(
                 .start()
             )
             q.awaitTermination()
-            _maybe_report_state_metrics(q)
             return spark.read.parquet(out_dir)
         name = f"pp_sink_{uuid.uuid4().hex[:12]}"
         q = (
@@ -265,9 +213,6 @@ def _run_to_table(
             .start()
         )
         q.awaitTermination()
-        _maybe_report_state_metrics(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.table(name)  # analyzed eagerly — survives the drop
     # deregister the sink at the NEXT query's entry: back-to-back
     # streaming queries in one session otherwise stack every sink's
@@ -785,20 +730,13 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(f"{state_root}/v{cur + 1}")
         version["n"] = cur + 1
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "2"),
-    )
-    try:
+    with stream_conf_scope(spark):
         q = (
             src.writeStream.foreachBatch(upsert)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(f"{state_root}/v{version['n']}").select(
         "user_id",
         F.col("ts").alias("last_ts"),
@@ -860,14 +798,8 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("p"),
     )
-    sparkSession = stream.sparkSession
-    prev = sparkSession.conf.get("spark.sql.shuffle.partitions")
-    sparkSession.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "2"),
-    )
-    try:
-        sink = f"pp_sink_{uuid.uuid4().hex[:12]}"
+    sink = f"pp_sink_{uuid.uuid4().hex[:12]}"
+    with stream_conf_scope(spark):
         q = (
             counted.writeStream.format("memory")
             .queryName(sink)
@@ -876,9 +808,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-        telemetry_rows = sum(p.numInputRows for p in q.recentProgress)
-    finally:
-        sparkSession.conf.set("spark.sql.shuffle.partitions", prev)
+    telemetry_rows = sum(p.numInputRows for p in q.recentProgress)
     result = spark.table(sink).collect()[-1]
     assert telemetry_rows == result["n"], (telemetry_rows, result["n"])
     return spark.createDataFrame(
@@ -930,12 +860,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return sum(p.numInputRows for p in q.recentProgress)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "2"),
-    )
-    try:
+    with stream_conf_scope(spark):
         pq.write_table(t.slice(0, step), os.path.join(src, "phase_a.parquet"))
         first_in = _run(f"pp_ckpt_a_{uuid.uuid4().hex[:8]}")
         pq.write_table(
@@ -943,8 +868,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink_b = f"pp_ckpt_b_{uuid.uuid4().hex[:8]}"
         second_in = _run(sink_b)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     final_count = spark.table(sink_b).collect()[-1]["n"]
     exactly_once = (
         first_in == step and second_in == n - step and final_count == n

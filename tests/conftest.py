@@ -17,6 +17,13 @@ TABLES = (
 )
 
 
+def session_confs(spark) -> dict[str, str]:
+    """The session's confs, without the engine's spark.pp.* markers."""
+    return {
+        k: v for k, v in spark.conf.getAll.items() if not k.startswith("spark.pp.")
+    }
+
+
 @pytest.fixture(scope="session")
 def spark():
     from parquet_playground_spark import registry

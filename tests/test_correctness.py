@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, session_confs
 from tools.verify_local import canon_rows
 
 # at least one query per §2.3 category, biased toward the ones fixed
@@ -320,9 +320,15 @@ def _registry():
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_match(spark, oracle_con, name):
     reg = _registry()
+    reg.release_tracked_caches()
+    confs_before = session_confs(spark)
     sdf = reg.QUERIES[name](spark, SF_DIR)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
+    reg.release_tracked_caches()
+    # no query's conf overrides outlive it (session.conf_scope,
+    # registry.track_confs)
+    assert session_confs(spark) == confs_before
 
     rel = oracle_con.sql(reg.ORACLES[name])
     ocols = list(rel.columns)

@@ -15,7 +15,7 @@ from parquet_playground_spark.plans.inspect import (
     read_schema_columns,
     uses_broadcast_join,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, session_confs
 
 
 def _q(name):
@@ -220,35 +220,18 @@ def test_lsh_rerank_stage1_is_hash_join(spark):
 
 
 def test_bloom_runtime_filter_injects_might_contain(spark):
-    """Under the scoped confs join_bloom_runtime_filter uses, the
-    optimizer must inject a bloom might_contain() predicate on the
-    probe side before the shuffle (the conf restore in the query fn
-    means the plan must be captured inside the scope)."""
-    from parquet_playground_spark.tables import load_table
-    from pyspark.sql import functions as F
-
-    confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        li = load_table(spark, SF_DIR, "lineitem")
-        o = load_table(spark, SF_DIR, "orders").filter(
-            F.col("o_totalprice") > 55000
-        )
-        plan = formatted_plan(li.join(o, li.l_orderkey == o.o_orderkey))
-        assert "might_contain" in plan.lower()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    """The registered join_bloom_runtime_filter executes under its
+    confs: the optimizer injects a bloom might_contain() predicate on
+    the probe side and the join stays a shuffle join. The confs hold
+    until the next registered query starts, which restores them."""
+    before = session_confs(spark)
+    df = _q("join_bloom_runtime_filter")(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "might_contain" in plan.lower(), plan
+    assert "BroadcastHashJoin" not in plan, plan
+    _q("agg_groupby")(spark, SF_DIR)
+    assert session_confs(spark) == before
 
 
 def test_topk_per_group_uses_window_group_limit(spark):

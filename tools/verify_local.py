@@ -17,9 +17,10 @@ Spark's int64 under any type-sensitive canon.
 --vanilla runs the queries on a bare
 `SparkSession.builder.master("local[8]").getOrCreate()` session instead
 of `get_spark` — the external driver builds exactly such a session, so
-confs injected by get_spark (timezone, AQE, the crypto classpath) are
-absent and every query must self-provision via
-`tables.ensure_session_defaults` / `install_crypto_classloader`.
+launch-time confs get_spark sets (the crypto classpath) are absent and
+every query must self-provision via `session.ensure_session_defaults` /
+`install_crypto_classloader`. The last line lists any conf of
+`session.SESSION_CONFS` the session does not hold after the sweep.
 --vanilla --strict together are the closest local approximation of the
 official gate.
 
@@ -188,6 +189,7 @@ def main() -> int:
     import argparse
 
     from parquet_playground_spark import get_spark, registry
+    from parquet_playground_spark.session import SESSION_CONFS
 
     # argparse (r6 ADVICE): the hand-rolled parser raised IndexError
     # when a flag's value was missing, and silently ate unknown flags.
@@ -388,11 +390,17 @@ def main() -> int:
                 # them between queries — milliseconds next to an sf100
                 # query.
                 spark.sparkContext._jvm.System.gc()
+    drift = {
+        k: spark.conf.get(k, None)
+        for k, v in SESSION_CONFS.items()
+        if spark.conf.get(k, None) != v
+    }
     print(
         f"\n{n_pass} oracle-pass, {n_rows_only} rows-only, "
         f"{n_big} big-count-only, {n_fail} FAIL"
         + (f": {failures}" if failures else "")
     )
+    print(f"session confs off SESSION_CONFS: {drift or 'none'}")
     return 1 if n_fail else 0
 
 
